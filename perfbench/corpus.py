@@ -15,7 +15,8 @@ argument alone: the same seed writes byte-identical inputs.
   the live state, so every count a refresh should report is known before
   the refresh runs.
 - ``detail_pages`` draws the product-detail page requests (page number,
-  sort column, direction) of a dashboard load.
+  sort column, direction) of a dashboard load, and ``session_order`` the
+  order of the warm session's requests.
 """
 
 from __future__ import annotations
@@ -225,9 +226,10 @@ class RefreshFeed:
         self.batches.append(batch)
         return batch
 
-    def lookup_keys(self, k: int = 25) -> dict[int, tuple[int, int, int]]:
-        """A seeded sample of live keys with their expected (supplier, qty, price)."""
-        rng = np.random.default_rng([self.seed, 3, len(self.batches)])
+    def lookup_keys(self, request: int, k: int = 25) -> dict[int, tuple[int, int, int]]:
+        """A seeded sample of live keys with their expected (supplier, qty,
+        price), drawn anew for each read request after a refresh."""
+        rng = np.random.default_rng([self.seed, 3, len(self.batches), request])
         idx = rng.choice(len(self.state["row_id"]), k, replace=False)
         return {
             int(self.state["row_id"][i]): (
@@ -244,7 +246,7 @@ class RefreshFeed:
 
 
 # ---------------------------------------------------------------------------
-# dashboard product-detail requests
+# dashboard requests
 # ---------------------------------------------------------------------------
 
 DETAIL_SORT_COLUMNS = ("profit", "average_unit_price", "nunique_customer", "selling_duration")
@@ -259,3 +261,12 @@ def detail_pages(seed: int, n: int, n_products: int, page_size: int = 20) -> lis
     cols = rng.integers(0, len(DETAIL_SORT_COLUMNS), n)
     desc = rng.integers(0, 2, n).astype(bool)
     return [(int(p), DETAIL_SORT_COLUMNS[c], bool(d)) for p, c, d in zip(pages, cols, desc)]
+
+
+def session_order(seed: int, mix: dict[str, int]) -> list[str]:
+    """The warm dashboard session's request order: ``mix[name]`` requests of
+    each page, shuffled by the seed. The counts are fixed so that every seed
+    times the same mix of pages."""
+    names = [name for name, k in mix.items() for _ in range(k)]
+    order = np.random.default_rng([seed, 5]).permutation(len(names))
+    return [names[i] for i in order]

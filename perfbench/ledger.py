@@ -21,6 +21,7 @@ cover) and writes one JSON line per span.
 
 from __future__ import annotations
 
+import gc
 import itertools
 import json
 import os
@@ -29,7 +30,7 @@ import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-_CLK_TCK = os.sysconf("SC_CLK_TCK")
+SETTLE_ROUNDS = 10
 CATALYST_PHASES = ("analysis", "optimization", "planning")
 EXECUTOR_FIELDS = (
     "jobs",
@@ -53,8 +54,6 @@ class Span:
     request_id: str
     start: float
     end: float = 0.0
-    cpu_start: float = 0.0
-    cpu_end: float = 0.0
     job_lo: int = 0
     job_hi: int = 0
     frames: list = field(default_factory=list)
@@ -65,10 +64,6 @@ class Span:
     @property
     def seconds(self) -> float:
         return self.end - self.start
-
-    @property
-    def cpu_seconds(self) -> float:
-        return self.cpu_end - self.cpu_start
 
     def counter(self, name: str) -> float:
         return self.executor.get(name, 0)
@@ -83,25 +78,11 @@ class Ledger:
         self._stack: list[Span] = []
         self._ids = itertools.count(1)
         self._spark = None
-        self._jvm_stat = None
         self.instrument_s = 0.0  # time spent inside the tracer itself
 
     def attach(self, spark) -> None:
         """Bind the session once it exists (the session-start span precedes it)."""
         self._spark = spark
-        pid = spark._jvm.java.lang.ProcessHandle.current().pid()
-        self._jvm_stat = f"/proc/{pid}/stat"
-
-    def cpu_seconds(self) -> float:
-        """CPU time used so far by this process and the Spark JVM. Unlike wall
-        time it leaves out time the host gave to other tenants."""
-        t = os.times()
-        total = t.user + t.system
-        if self._jvm_stat:
-            with open(self._jvm_stat) as fh:
-                fields = fh.read().rsplit(")", 1)[1].split()
-            total += (int(fields[11]) + int(fields[12])) / _CLK_TCK
-        return total
 
     def _job_counter(self) -> int:
         return self._spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
@@ -125,14 +106,12 @@ class Ledger:
             self._set_group(s)
         self.spans.append(s)
         self._stack.append(s)
-        s.cpu_start = self.cpu_seconds()
         s.start = time.perf_counter()
         self.instrument_s += s.start - t0
         try:
             yield s
         finally:
             s.end = time.perf_counter()
-            s.cpu_end = self.cpu_seconds()
             self._stack.pop()
             if live:
                 s.job_hi = self._job_counter()
@@ -196,7 +175,6 @@ class Ledger:
                             "start_s": round(s.start, 6),
                             "end_s": round(s.end, 6),
                             "self_s": round(s.self_s, 6),
-                            "cpu_s": round(s.cpu_seconds, 3),
                             "jobs": [s.job_lo, s.job_hi],
                             "catalyst_ms": s.catalyst_ms,
                             "executor": s.executor,
@@ -249,6 +227,34 @@ def _union_length(intervals: list[tuple[float, float]]) -> float:
     if cur_hi is not None:
         total += cur_hi - cur_lo
     return total
+
+
+def retained_heap_mb(spark) -> float:
+    """JVM heap (MB) still live once the program is idle: what it keeps
+    alive, such as cached plans and data, broadcasts and the fit cache.
+
+    Spark's cleaner thread releases shuffle and broadcast state only after a
+    collection has freed the objects that owned it, so the first full
+    collections read high (by 50-75 MB after ``paper_pipeline``). Collect
+    until two collections a second apart agree within 1 MB."""
+    jvm = spark._jvm
+    pools = jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+    prev = None
+    for _ in range(SETTLE_ROUNDS):
+        gc.collect()  # drop Python proxies of JVM objects that only cycles still hold
+        jvm.java.lang.System.gc()  # a full, stop-the-world collection on G1
+        # each heap pool's usage right after that collection, which leaves
+        # out what threads allocated since
+        used = 0
+        for i in range(pools.size()):
+            after_gc = pools.get(i).getCollectionUsage()
+            if after_gc is not None:
+                used += after_gc.getUsed()
+        if prev is not None and abs(used - prev) < 2**20:
+            break
+        prev = used
+        time.sleep(1.0)
+    return used / 2**20
 
 
 def peak_rss_mb(spark) -> tuple[float, float]:

@@ -1,11 +1,17 @@
-"""``paper_pipeline``: one cold batch run of the paper's path.
+"""``paper_pipeline``: one cold batch run of the paper's path, then a warm
+dashboard session.
 
-Raw tables → star schema written (``etl.pipeline_log.run_warehouse_build``)
-→ cold ``product_clusters`` (feature matrix + eager KMeans fit) → the
-assignment written back (``sources.io.write_parquet_table``) → the first
-dashboard load: ``cluster_summary``, ``category_rollup``,
-``product_pagination``, ``product_search`` and seeded product-detail pages
+The cold pass: raw tables → star schema written
+(``etl.pipeline_log.run_warehouse_build``) → cold ``product_clusters``
+(feature matrix + eager KMeans fit) → the assignment written back
+(``sources.io.write_parquet_table``) → the first dashboard load:
+``cluster_summary``, ``category_rollup``, ``product_pagination``,
+``product_search`` and seeded product-detail pages
 (``operators.pagination.paginate`` over the assignment).
+
+The warm session follows in the same process, with the fit cached: a fixed,
+skewed mix of dashboard requests in seeded order, detail pages with seeded
+page numbers and sort columns.
 """
 
 from __future__ import annotations
@@ -17,7 +23,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from checks import dir_bytes, oracle_connection, partition_fingerprint, same_rows
-from corpus import detail_pages
+from corpus import detail_pages, session_order
+from ledger import retained_heap_mb
 from data_warehouse_product_mix_clustering_spark.etl.pipeline_log import run_warehouse_build
 from data_warehouse_product_mix_clustering_spark.etl.star_schema import invalidate_star_cache
 from data_warehouse_product_mix_clustering_spark.ml.pipelines import DEFAULT_K
@@ -30,6 +37,16 @@ SOURCE_TABLES = ("part", "orders", "lineitem")
 DASHBOARD_QUERIES = ("cluster_summary", "category_rollup", "product_pagination", "product_search")
 DETAIL = "product_detail"
 DETAIL_REQUESTS = 3
+# requests per page in the warm session: cheap pages more often than the
+# full-fact rollups
+SESSION_MIX = {
+    "product_search": 4,
+    DETAIL: 4,
+    "product_clusters": 3,
+    "cluster_profile": 3,
+    "cluster_summary": 2,
+    "category_rollup": 2,
+}
 PAGE_SIZE = 20
 # at most one feature row per part; a page past the end is a valid empty page
 N_FEATURE_ROWS_MAX = 20_000
@@ -47,7 +64,26 @@ def measure(ctx) -> None:
     spark, sf, led, rid = ctx.spark, ctx.sf_dir, ctx.ledger, ctx.workload
     qs = all_queries()
     wh = os.path.join(ctx.work_dir, "warehouse")
-    requests = detail_pages(ctx.seed, DETAIL_REQUESTS, N_FEATURE_ROWS_MAX, PAGE_SIZE)
+    n_detail = DETAIL_REQUESTS + SESSION_MIX[DETAIL]
+    details = detail_pages(ctx.seed, n_detail, N_FEATURE_ROWS_MAX, PAGE_SIZE)
+    cold_details, warm_details = details[:DETAIL_REQUESTS], iter(details[DETAIL_REQUESTS:])
+    order = session_order(ctx.seed, SESSION_MIX)
+
+    def request(name, params=None):
+        """One dashboard request: the query-function call, then the action."""
+        with led.span(f"query.{name}", rid) as req:
+            with led.span(f"plans.call.{name}", rid) as call:
+                if name == DETAIL:
+                    page, col, desc = params
+                    by = [F.col(col).desc() if desc else F.col(col).asc(), F.col("product_id")]
+                    pc = qs["product_clusters"].fn(spark, sf)
+                    df = paginate(pc, order_by=by, page=page, page_size=PAGE_SIZE)
+                else:
+                    df = qs[name].fn(spark, sf)
+            with led.span(f"action.{name}", rid) as act:
+                pdf = df.toPandas()
+                led.forced(act, df)
+        return {"name": name, "params": params, "pdf": pdf, "req": req, "call": call, "act": act}
 
     # 1. a cold start: the program's memo caches dropped through their
     # public invalidators (the star cache also drops the fit cache), and
@@ -55,7 +91,6 @@ def measure(ctx) -> None:
     sources.invalidate()
     invalidate_star_cache()
 
-    frames, pages, latencies, detail_s = {}, [], {}, []
     with led.span("pipeline", rid) as pipe:
         with led.span("etl.build", rid):
             written = run_warehouse_build(spark, sf, wh)
@@ -63,24 +98,12 @@ def measure(ctx) -> None:
             assignment = qs["product_clusters"].fn(spark, sf)
         with led.span("sources.write_assignments", rid):
             write_parquet_table(assignment, os.path.join(wh, "ProductClusters"))
-        for name in DASHBOARD_QUERIES:
-            with led.span(f"query.{name}", rid) as req:
-                with led.span(f"plans.call.{name}", rid):
-                    df = qs[name].fn(spark, sf)
-                with led.span(f"action.{name}", rid) as act:
-                    frames[name] = df.toPandas()
-                    led.forced(act, df)
-            latencies[name] = req.seconds
-        for page, col, desc in requests:
-            with led.span(f"query.{DETAIL}", rid) as req:
-                with led.span(f"plans.call.{DETAIL}", rid):
-                    order = [F.col(col).desc() if desc else F.col(col).asc(), F.col("product_id")]
-                    df = paginate(assignment, order_by=order, page=page, page_size=PAGE_SIZE)
-                with led.span(f"action.{DETAIL}", rid) as act:
-                    pages.append(df.toPandas())
-                    led.forced(act, df)
-            detail_s.append(req.seconds)
-    ctx.ops(3 + len(latencies) + len(detail_s))  # build, fit, write-back, each request
+        cold = [request(name) for name in DASHBOARD_QUERIES]
+        cold += [request(DETAIL, p) for p in cold_details]
+    with led.span("session", rid) as session:
+        warm = [request(name, next(warm_details) if name == DETAIL else None) for name in order]
+    ctx.ops(3 + len(cold) + len(warm))  # build, fit, write-back, each request
+    ctx.e2e["retained_heap_mb"] = retained_heap_mb(spark)
 
     features_exec = 0.0
     if ctx.traced:
@@ -94,9 +117,7 @@ def measure(ctx) -> None:
 
     # -- correctness (outside the timed region) -----------------------------
     con = oracle_connection(sf, SOURCE_TABLES)
-    for name in DASHBOARD_QUERIES:
-        ok, detail = same_rows(frames[name], con.sql(qs[name].oracle).df())
-        ctx.check(f"oracle.{name}", ok, detail)
+    oracle = {name: con.sql(qs[name].oracle).df() for name in DASHBOARD_QUERIES}
     want_feats = con.sql(qs["product_features"].oracle).df()
     got = assignment.toPandas()
     ok, detail = same_rows(got.drop(columns=["cluster"]), want_feats)
@@ -112,7 +133,7 @@ def measure(ctx) -> None:
     labels = sorted(got["cluster"].unique())
     ctx.check("assignment.k_labels", labels == list(range(DEFAULT_K)), f"labels {labels}")
     fp = partition_fingerprint(got["product_id"], got["cluster"])
-    fp_path = os.path.join(ctx.results_dir, f"partition-seed{ctx.seed}.txt")
+    fp_path = ctx.saved_state("partition.txt")
     if os.path.exists(fp_path):
         with open(fp_path) as fh:
             prev = fh.read().strip()
@@ -125,11 +146,24 @@ def measure(ctx) -> None:
         written_back.num_rows == len(got),
         f"{written_back.num_rows} rows written",
     )
-    for (page, col, desc), pdf in zip(requests, pages):
-        ranked = got.sort_values([col, "product_id"], ascending=[not desc, True])
-        want = ranked.iloc[(page - 1) * PAGE_SIZE : page * PAGE_SIZE].reset_index(drop=True)
-        ok = pdf[list(got.columns)].reset_index(drop=True).equals(want)
-        ctx.check(f"pagination.page{page}.{col}.{'desc' if desc else 'asc'}", ok, f"{len(pdf)} rows")
+    sizes = {int(c): int(n) for c, n in got.groupby("cluster").size().items()}
+    for i, r in enumerate(cold + warm):
+        name, pdf = r["name"], r["pdf"]
+        label = f"{'cold' if i < len(cold) else 'warm'}.{i}.{name}"
+        if name in oracle:
+            ok, detail = same_rows(pdf, oracle[name])
+        elif name == "product_clusters":
+            ok, detail = same_rows(pdf, got)
+        elif name == "cluster_profile":
+            n = {int(c): int(k) for c, k in zip(pdf["cluster"], pdf["n_products"])}
+            ok, detail = n == sizes, f"cluster sizes {n} vs {sizes}"
+        else:
+            page, col, desc = r["params"]
+            ranked = got.sort_values([col, "product_id"], ascending=[not desc, True])
+            want = ranked.iloc[(page - 1) * PAGE_SIZE : page * PAGE_SIZE].reset_index(drop=True)
+            ok = pdf[list(got.columns)].reset_index(drop=True).equals(want)
+            detail = f"page {page} by {col} {'desc' if desc else 'asc'}: {len(pdf)} rows"
+        ctx.check(label, ok, detail)
     fact_rows = con.sql(
         "SELECT count(*) FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
     ).fetchone()[0]
@@ -142,28 +176,26 @@ def measure(ctx) -> None:
 
     # -- metrics ------------------------------------------------------------
     led.collect()
-    input_bytes = sum(ctx.input_bytes.values())
+    warm_s = [r["req"].seconds for r in warm]
     ctx.e2e.update(
         pipeline_wall_s=pipe.seconds,
-        query_p50_ms=statistics.median(latencies.values()) * 1000,
-        queries_per_s=(len(latencies) + len(detail_s)) / (sum(latencies.values()) + sum(detail_s)),
-        bytes_stored_per_input_byte=dir_bytes(wh) / input_bytes,
+        query_p50_ms=statistics.median(warm_s) * 1000,
+        queries_per_s=len(warm_s) / sum(warm_s),
+        bytes_stored_per_input_byte=dir_bytes(wh) / sum(ctx.input_bytes.values()),
     )
-    ctx.samples.update(queries=len(latencies), detail_pages=len(detail_s))
+    ctx.samples.update(cold_requests=len(cold), warm_requests=len(warm))
     ctx.receipt.update(
         rows_written=rows_written,
         feature_rows=len(want_feats),
-        detail_requests=[{"page": p, "sort": c, "desc": d} for p, c, d in requests],
-        query_ms={k: round(v * 1000, 3) for k, v in latencies.items()},
-        pipeline_cpu_s=round(pipe.cpu_seconds, 3),
-        query_cpu_s=[round(s.cpu_seconds, 3) for s in led.spans if s.name.startswith("query.")],
-        detail_page_ms=[round(v * 1000, 3) for v in detail_s],
+        detail_requests=[{"page": p, "sort": c, "desc": d} for p, c, d in details],
+        cold_ms={r["name"]: round(r["req"].seconds * 1000, 3) for r in cold},
+        warm_ms=[[r["name"], round(r["req"].seconds * 1000, 3)] for r in warm],
     )
     if not ctx.traced:
         return
     build = led.named("etl.build")
     fit = led.named("ml.fit_call")
-    calls = [s for s in led.spans if s.name.startswith("plans.call.")]
+    calls = [r["call"] for r in cold + warm]
     layer = ctx.layer
     layer.update(
         {
@@ -178,12 +210,12 @@ def measure(ctx) -> None:
             "plans.eager_jobs": led.total(calls, "jobs"),
         }
     )
-    ctx.layer_catalyst_executor([s for s in led.spans if s.name.startswith("action.")], [pipe])
-    for name in (*DASHBOARD_QUERIES, DETAIL):
-        reqs = led.named(f"query.{name}")
+    ctx.layer_catalyst_executor([r["act"] for r in cold + warm], [pipe, session])
+    for name in SESSION_MIX:
+        reqs = [r for r in warm if r["name"] == name]
         n = len(reqs)
-        layer[f"q.{name}.call_ms"] = sum(s.seconds for s in led.named(f"plans.call.{name}")) * 1000 / n
-        acts = led.named(f"action.{name}")
+        acts = [r["act"] for r in reqs]
+        layer[f"q.{name}.call_ms"] = sum(r["call"].seconds for r in reqs) * 1000 / n
         layer[f"q.{name}.exec_ms"] = sum(s.seconds for s in acts) * 1000 / n
         layer[f"q.{name}.catalyst_ms"] = sum(sum(s.catalyst_ms.values()) for s in acts) / n
-        layer[f"q.{name}.jobs"] = led.total(reqs, "jobs") / n
+        layer[f"q.{name}.jobs"] = led.total([r["req"] for r in reqs], "jobs") / n

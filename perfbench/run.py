@@ -17,6 +17,7 @@ Exit status 1 means a check failed.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import shutil
@@ -44,22 +45,24 @@ DETERMINISTIC = (
     "etl.refresh_changes",
     "streaming.quarantined_rows",
 )
-# A fixed JVM heap (-Xms = -Xmx): a growable heap made peak RSS depend on
-# when the collector grew it, and 1 GB left the refresh collector-bound.
+# A fixed JVM heap (-Xms = -Xmx): a heap that grows when the collector
+# decides made run times and peak RSS depend on that decision, and 1 GB left
+# the refresh collector-bound. Memory is measured as the heap the program
+# keeps alive (``retained_heap_mb``), which the heap size does not set.
 JVM_HEAP = "2g"
 # end-to-end metrics whose traced-minus-untraced difference is the tracing overhead
-OVERHEAD_OF = ("setup_s", "pipeline_wall_s", "query_p50_ms", "peak_rss_mb")
+OVERHEAD_OF = ("setup_s", "pipeline_wall_s", "query_p50_ms", "retained_heap_mb")
 
 
 @dataclass
 class Context:
     workload: str
     seed: int
-    seconds: int
     traced: bool
     cores: int
     work_dir: str
     results_dir: str
+    code_key: str
     ledger: Ledger
     sf_dir: str = ""
     spark: object = None
@@ -80,6 +83,10 @@ class Context:
         self.attempted += 1
         self.checks.append({"name": name, "ok": bool(ok), "detail": detail})
 
+    def saved_state(self, name: str) -> str:
+        """Path of state kept between runs of this workload, seed and code."""
+        return os.path.join(self.results_dir, f"{self.workload}-seed{self.seed}-{self.code_key}-{name}")
+
     @property
     def failed(self) -> int:
         return sum(not c["ok"] for c in self.checks)
@@ -91,6 +98,22 @@ class Context:
             self.layer[f"catalyst.{p}_ms"] = sum(s.catalyst_ms.get(p, 0.0) for s in forced_spans)
         for f in EXECUTOR_FIELDS:
             self.layer[f"executor.{f}"] = self.ledger.total(covering_spans, f)
+
+
+def _code_key() -> str:
+    """A hash of the program's and the benchmark's sources. State saved by one
+    run is compared only with later runs of the same code."""
+    root = os.path.dirname(HERE)
+    h = hashlib.sha256()
+    for top in (os.path.join(root, "data_warehouse_product_mix_clustering_spark"), HERE):
+        for dirpath, dirs, files in os.walk(top):
+            dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+            for f in sorted(f for f in files if f.endswith(".py")):
+                path = os.path.join(dirpath, f)
+                h.update(os.path.relpath(path, root).encode() + b"\0")
+                with open(path, "rb") as fh:
+                    h.update(fh.read())
+    return h.hexdigest()[:12]
 
 
 def _spec() -> dict:
@@ -129,9 +152,9 @@ def _stop_spark(spark) -> None:
 
 
 def _trace_extras(ctx: Context) -> None:
-    """Tracing overhead against the last untraced run of this workload, and
-    whether the deterministic counters repeat the last traced run of this seed."""
-    base_path = os.path.join(ctx.results_dir, f"{ctx.workload}-untraced.json")
+    """Tracing overhead against the last untraced run, and whether the
+    deterministic counters repeat the last traced run, of this seed and code."""
+    base_path = ctx.saved_state("untraced.json")
     base = None
     if os.path.exists(base_path):
         with open(base_path) as fh:
@@ -142,7 +165,7 @@ def _trace_extras(ctx: Context) -> None:
     ctx.layer["trace.instrument_ms"] = ctx.ledger.instrument_s * 1000
     ctx.layer["trace.spans"] = len(ctx.ledger.spans)
     counters = {k: v for k, v in ctx.layer.items() if k in DETERMINISTIC or k.endswith(".jobs")}
-    path = os.path.join(ctx.results_dir, f"{ctx.workload}-seed{ctx.seed}-counters.json")
+    path = ctx.saved_state("counters.json")
     repeat = -1
     if os.path.exists(path):
         with open(path) as fh:
@@ -160,6 +183,8 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
+    # each workload runs a fixed amount of work, sized to run_seconds in
+    # BENCHMARK.json, so that no metric depends on how fast the program is
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
@@ -174,11 +199,11 @@ def main(argv: list[str] | None = None) -> int:
     ctx = Context(
         workload=args.workload,
         seed=args.seed,
-        seconds=args.seconds,
         traced=bool(args.trace),
         cores=min(4, os.cpu_count() or 1),
         work_dir=work_dir,
         results_dir=results_dir,
+        code_key=_code_key(),
         ledger=Ledger(traced=bool(args.trace)),
     )
     try:
@@ -212,7 +237,6 @@ def _run(ctx: Context, spec: dict) -> int:
         workload.measure(ctx)
         ctx.e2e["setup_s"] = start.seconds + sum(s.seconds for s in ctx.setup_spans)
         py_mb, jvm_mb = peak_rss_mb(ctx.spark)
-        ctx.e2e["peak_rss_mb"] = py_mb + jvm_mb
         ctx.receipt["peak_rss_mb"] = {"python": py_mb, "jvm": jvm_mb}
         spark_version = ctx.spark.version
     finally:
@@ -225,7 +249,7 @@ def _run(ctx: Context, spec: dict) -> int:
         _trace_extras(ctx)
         led.write(os.path.join(ctx.results_dir, f"{ctx.workload}-seed{ctx.seed}-spans.jsonl"))
     else:
-        with open(os.path.join(ctx.results_dir, f"{ctx.workload}-untraced.json"), "w") as fh:
+        with open(ctx.saved_state("untraced.json"), "w") as fh:
             json.dump(ctx.e2e, fh)
 
     wanted = spec["per_layer"] if ctx.traced else spec["end_to_end"]
@@ -238,6 +262,7 @@ def _run(ctx: Context, spec: dict) -> int:
     receipt = {
         "workload": ctx.workload,
         "seed": ctx.seed,
+        "code_key": ctx.code_key,
         "traced": ctx.traced,
         "host": {"cores_used": ctx.cores, "nproc": os.cpu_count(), "spark": spark_version},
         "inputs": {"kind": inputs, "seed": ctx.seed, "bytes": ctx.input_bytes},

@@ -3,9 +3,10 @@
 Set-up bulk-loads a 300,000-row landing feed through
 ``etl.refresh_pipeline.refresh_warehouse`` (quarantined streaming ingest,
 versioned publish, full rollup) and runs warm-up refreshes. The timed loop
-lands one seeded batch per cycle (upserts, new keys, tombstones and
-malformed lines), refreshes, then reads the published rollup and looks up
-a sample of keys in the published table.
+runs three cycles; each lands one seeded batch (upserts, new keys,
+tombstones and malformed lines), refreshes, then serves four read requests,
+each reading the published rollup and looking up a seeded sample of keys in
+the published table.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ from pyspark.sql import types as T
 
 from checks import dir_bytes
 from corpus import RefreshFeed
+from ledger import retained_heap_mb
 from data_warehouse_product_mix_clustering_spark.etl.refresh_pipeline import refresh_warehouse
 from data_warehouse_product_mix_clustering_spark.sources.versioned import read_table, versions
 from data_warehouse_product_mix_clustering_spark.streaming.quarantine import (
@@ -38,8 +40,11 @@ MEASURES = {"qty": "qty", "revenue_cents": "price_cents"}
 # Refresh time falls over the first cycles while the JVM compiles the
 # refresh's code paths; these run in set-up.
 WARMUP_REFRESHES = 2
-MIN_TIMED_REFRESHES = 3
-MAX_TIMED_REFRESHES = 8
+# A fixed count: the store keeps every version, so each refresh adds a table
+# copy, and the stored bytes must not depend on how fast refreshes run.
+TIMED_REFRESHES = 3
+# read requests after each refresh; the read metrics are medians over all
+READS_PER_REFRESH = 4
 
 
 def store_dir(ctx) -> str:
@@ -53,13 +58,13 @@ def prepare(ctx) -> None:
         batch = feed.batches[0] if i == 0 else feed.land_increment()
         res, span = _refresh(ctx, "etl.refresh.setup")
         ctx.setup_spans.append(span)
-        _check(ctx, feed, batch, res, _read(ctx, feed, "setup"))
+        _check(ctx, feed, batch, res, [_read(ctx, feed, "setup", 0)])
 
 
 def measure(ctx) -> None:
     spark, feed, led, store = ctx.spark, ctx.feed, ctx.ledger, store_dir(ctx)
     refreshes, reads, read_parts, written, landed, changes = [], [], [], [], [], []
-    while True:
+    for _ in range(TIMED_REFRESHES):
         batch = feed.land_increment()
         before = dir_bytes(store)
         res, span = _refresh(ctx, "etl.refresh")
@@ -67,21 +72,18 @@ def measure(ctx) -> None:
         written.append(dir_bytes(store) - before)
         landed.append(batch.csv_bytes)
         changes.append(res["changes"])
-        got = _read(ctx, feed, "timed")
-        reads.append(got["span"])
-        read_parts.extend(got["parts"])
+        got = [_read(ctx, feed, "timed", i) for i in range(READS_PER_REFRESH)]
+        for g in got:
+            reads.append(g["span"])
+            read_parts.extend(g["parts"])
         _check(ctx, feed, batch, res, got)
-        n = len(refreshes)
-        if n >= MAX_TIMED_REFRESHES or n >= MIN_TIMED_REFRESHES and (
-            ctx.traced or sum(s.seconds for s in refreshes + reads) >= ctx.seconds
-        ):
-            break
     ctx.ops(len(refreshes) + len(reads))
+    ctx.e2e["retained_heap_mb"] = retained_heap_mb(spark)
     quarantined = read_sink(spark, os.path.join(store, "quarantine"), schema=QUARANTINE_SCHEMA).count()
 
     led.collect()
     landed_total = sum(b.csv_bytes for b in feed.batches)
-    read_s = [s.seconds for s in reads]  # one read request per refresh
+    read_s = [s.seconds for s in reads]
     ctx.e2e.update(
         pipeline_wall_s=statistics.median(s.seconds for s in refreshes),
         query_p50_ms=statistics.median(read_s) * 1000,
@@ -101,8 +103,6 @@ def measure(ctx) -> None:
             "batches": len(feed.batches) - 1,
         },
         refresh_s=[round(s.seconds, 4) for s in refreshes],
-        refresh_cpu_s=[round(s.cpu_seconds, 3) for s in refreshes],
-        read_cpu_s=[round(s.cpu_seconds, 3) for s in reads],
         read_ms=[round(x * 1000, 3) for x in read_s],
     )
     if not ctx.traced:
@@ -135,11 +135,11 @@ def _refresh(ctx, span_name: str):
     return res, s
 
 
-def _read(ctx, feed: RefreshFeed, phase: str) -> dict:
-    """The read request that follows a refresh: the whole published rollup,
-    then a lookup of a seeded sample of keys in the published table."""
+def _read(ctx, feed: RefreshFeed, phase: str, request: int) -> dict:
+    """A read request after a refresh: the whole published rollup, then a
+    lookup of a seeded sample of keys in the published table."""
     spark, led, work = ctx.spark, ctx.ledger, store_dir(ctx)
-    keys = feed.lookup_keys()
+    keys = feed.lookup_keys(request)
     with led.span(f"read.{phase}", ctx.workload) as req:
         with led.span("read.rollup", ctx.workload) as a:
             df = read_table(spark, os.path.join(work, "agg"))
@@ -152,7 +152,7 @@ def _read(ctx, feed: RefreshFeed, phase: str) -> dict:
     return {"rollup": rollup, "rows": rows, "keys": keys, "span": req, "parts": [a, b]}
 
 
-def _check(ctx, feed: RefreshFeed, batch, res: dict[str, int], got: dict) -> None:
+def _check(ctx, feed: RefreshFeed, batch, res: dict[str, int], reads: list[dict]) -> None:
     spark, work = ctx.spark, store_dir(ctx)
     v = res["version"]
     bulk = batch is feed.batches[0]
@@ -169,21 +169,26 @@ def _check(ctx, feed: RefreshFeed, batch, res: dict[str, int], got: dict) -> Non
     )
     as_map = lambda rows: {r["supplier"]: (r["qty"], r["revenue_cents"], r["n"]) for r in rows}  # noqa: E731
     ctx.check(
-        f"refresh.v{v}.rollup_equals_recompute",
-        as_map(got["rollup"]) == as_map(full),
-        f"{len(got['rollup'])} groups",
-    )
-    ctx.check(
         f"refresh.v{v}.rows",
         sum(r["n"] for r in full) == len(feed.state["row_id"]),
         f"{sum(r['n'] for r in full)} live rows vs {len(feed.state['row_id'])}",
     )
-    seen = {
-        r["row_id"]: (int(r["supplier"][1:]), r["qty"], r["price_cents"])
-        for r in got["rows"]
-        if not r["deleted"]
-    }
-    ctx.check(f"refresh.v{v}.fresh_lookup", seen == got["keys"], f"{len(seen)}/{len(got['keys'])} keys")
+    for i, got in enumerate(reads):
+        ctx.check(
+            f"refresh.v{v}.read{i}.rollup_equals_recompute",
+            as_map(got["rollup"]) == as_map(full),
+            f"{len(got['rollup'])} groups",
+        )
+        seen = {
+            r["row_id"]: (int(r["supplier"][1:]), r["qty"], r["price_cents"])
+            for r in got["rows"]
+            if not r["deleted"]
+        }
+        ctx.check(
+            f"refresh.v{v}.read{i}.fresh_lookup",
+            seen == got["keys"],
+            f"{len(seen)}/{len(got['keys'])} keys",
+        )
     quarantined = read_sink(spark, os.path.join(work, "quarantine"), schema=QUARANTINE_SCHEMA).count()
     ctx.check(
         f"refresh.v{v}.quarantined",

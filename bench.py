@@ -27,7 +27,7 @@ import sys
 import time
 
 from data_warehouse_product_mix_clustering_spark.plans.registry import all_queries
-from data_warehouse_product_mix_clustering_spark.session import get_spark
+from data_warehouse_product_mix_clustering_spark.session import get_spark, invalidate
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -91,12 +91,11 @@ def main() -> None:
     relations: dict[str, float] = {}
     if (SHARED_SHINGLES | POS_SHINGLES) & set(queries):
         from data_warehouse_product_mix_clustering_spark.plans.dedup import (
-            invalidate_shingle_cache,
             shared_pos_shingles,
             shared_shingles,
         )
 
-        invalidate_shingle_cache(SF_DIR)
+        invalidate(SF_DIR, kind="shingles")
         if SHARED_SHINGLES & set(queries):
             t0 = time.perf_counter()
             _force(shared_shingles(spark, SF_DIR))
@@ -111,9 +110,7 @@ def main() -> None:
     for name, q in sorted(queries.items()):
         if name in CACHED_FIT:
             # Evict any fit memoized by the warm-up so run 1 is honestly cold.
-            from data_warehouse_product_mix_clustering_spark.plans.ml import invalidate_cluster_cache
-
-            invalidate_cluster_cache(SF_DIR)
+            invalidate(SF_DIR, kind="fit")
         best = float("inf")
         for i in range(3):
             t0 = time.perf_counter()

@@ -98,67 +98,18 @@ def plan_size_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-# (applicationId, caller-supplied key, how, threshold) → choice string.
-# Catalyst plan-size measurement runs an optimizer pass ON THE DRIVER
-# (~0.1-0.2 s fixed latency per plan_size_bytes call — VERDICT r11 #1:
-# two such passes inside nation_revenue's 0.4 s serving path tripped its
-# bench budget). Table stats do not change within a session, so the
-# DECISION is memoized per session exactly like the star-builder cache
-# (etl/star_schema.py::_per_session): first call measures, every later
-# call applies the remembered hint for free. Entries from dead sessions
-# are evicted on insert; `invalidate_advice` is the explicit hook for
-# callers that rewrite data mid-session (wired into
-# sources.registry.invalidate alongside the scan cache).
-_ADVICE_CACHE: dict[tuple, str] = {}
-
-
-def invalidate_advice(path: str | None = None) -> None:
-    """Drop memoized advisor decisions related to ``path`` (or all,
-    when None). The scan cache's ``invalidate`` calls this with table
-    FILE paths (``{sf_dir}/customer.parquet``) while advisor cache keys
-    carry the bare sf_dir, so the match is SUBSTRING containment in
-    either direction — a key whose string element is a prefix of the
-    path (the sf_dir of the rewritten file) or contains it is dropped
-    (review r12: the first cut compared tuple elements by equality, so
-    no real path-scoped invalidate ever dropped a memo and a rewritten
-    table could keep serving its stale broadcast hint). Over-dropping
-    is safe — the next call re-measures; the cache is bounded (one
-    entry per advised join site per session)."""
-    if path is None:
-        _ADVICE_CACHE.clear()
-        return
-    for k in [
-        k
-        for k in _ADVICE_CACHE
-        if any(isinstance(e, str) and (e in path or path in e) for e in k)
-    ]:
-        del _ADVICE_CACHE[k]
-
-
-def _apply_choice(
-    left: DataFrame, right: DataFrame, on: list[str], how: str, choice: str
-) -> DataFrame:
-    if choice == "broadcast_left":
-        return F.broadcast(left).join(right, on, how)
-    if choice == "broadcast_right":
-        return left.join(F.broadcast(right), on, how)
-    return left.join(right, on, how)
-
-
-def advise_broadcast_join(
+def broadcast_choice(
     left: DataFrame,
     right: DataFrame,
-    on: list[str],
     how: str = "inner",
     threshold_bytes: int = 10 * 1024 * 1024,
-    cache_key: tuple | None = None,
-) -> tuple[DataFrame, str]:
-    """Join with the build side chosen from MEASURED plan sizes: the
-    smaller input gets an explicit ``broadcast()`` hint iff its Catalyst
-    size estimate is under ``threshold_bytes``; otherwise the join is
-    left unhinted (shuffle join, AQE free to re-plan). Returns
-    (joined, choice) with choice ∈ {'broadcast_left', 'broadcast_right',
-    'shuffle'} so callers/tests can pin the decision.
+) -> str:
+    """The build side for joining ``left`` and ``right``, chosen from
+    MEASURED plan sizes: the smaller eligible input is broadcast iff its
+    Catalyst size estimate is under ``threshold_bytes``; otherwise the
+    join is left unhinted (shuffle join, AQE free to re-plan). One of
+    'broadcast_left', 'broadcast_right', 'shuffle'; ``join_with_choice``
+    applies it.
 
     This is deliberately a THIN layer over Catalyst — the value is the
     explicit, stats-derived, inspectable decision for joins whose small
@@ -173,18 +124,13 @@ def advise_broadcast_join(
     broadcast build side — left-ish joins may broadcast only the right
     input, right joins only the left, full outer neither.
 
-    ``cache_key``: when supplied, the decision is memoized per
-    (applicationId, cache_key, how, threshold) — see ``_ADVICE_CACHE``.
-    Only stable serving-path joins should pass one (the key asserts
-    "these inputs' stats are session-constant"); ad-hoc calls omit it
-    and measure every time."""
-    full_key = None
-    if cache_key is not None:
-        app_id = left.sparkSession.sparkContext.applicationId
-        full_key = (app_id, *cache_key, how, threshold_bytes)
-        hit = _ADVICE_CACHE.get(full_key)
-        if hit is not None:
-            return _apply_choice(left, right, on, how, hit), hit
+    Each call runs two driver-side optimizer passes (``plan_size_bytes``,
+    ~0.1-0.2 s each — VERDICT r11 #1: two inside nation_revenue's 0.4 s
+    serving path tripped its bench budget). Table stats do not change
+    within a session, so a stable serving-path join site memoizes the
+    decision in the session memo (kind ``"advice"``, keyed by its sf_dir
+    and site name — see ``plans/warehouse.py::nation_revenue_parts``);
+    ``invalidate(sf_dir)`` drops it with the data it was measured from."""
     h = how.lower().replace("_", "")
     if h in ("inner", "cross"):
         eligible = {"left", "right"}
@@ -199,11 +145,16 @@ def advise_broadcast_join(
         [(sz, side) for sz, side in ((lb, "left"), (rb, "right")) if side in eligible]
     )
     if candidates and candidates[0][0] <= threshold_bytes:
-        choice = "broadcast_" + candidates[0][1]
-    else:
-        choice = "shuffle"
-    if full_key is not None:
-        for stale in [k for k in _ADVICE_CACHE if k[0] != full_key[0]]:
-            del _ADVICE_CACHE[stale]
-        _ADVICE_CACHE[full_key] = choice
-    return _apply_choice(left, right, on, how, choice), choice
+        return "broadcast_" + candidates[0][1]
+    return "shuffle"
+
+
+def join_with_choice(
+    left: DataFrame, right: DataFrame, on: list[str], how: str, choice: str
+) -> DataFrame:
+    """Join ``left`` and ``right`` with the hint ``broadcast_choice`` named."""
+    if choice == "broadcast_left":
+        return F.broadcast(left).join(right, on, how)
+    if choice == "broadcast_right":
+        return left.join(F.broadcast(right), on, how)
+    return left.join(right, on, how)

@@ -39,59 +39,40 @@ from data_warehouse_product_mix_clustering_spark.operators.dedup import (
     simhash_near_pairs,
 )
 from data_warehouse_product_mix_clustering_spark.plans.registry import register
+from data_warehouse_product_mix_clustering_spark.session import session_memo
 from data_warehouse_product_mix_clustering_spark.sources.registry import table
 
-# (applicationId, sf_dir, n) → session-persisted distinct (doc_id, shingle)
-# relation over ``documents``. The whole dedup family starts from this one
-# relation (tokenize → n-gram → explode-distinct — the dominant cost of
-# every shingle-based query), so a session running several dedup queries
-# back-to-back (exactly what a dedup PIPELINE does: Jaccard + containment +
-# LSH over one corpus) should materialize it once, the same catalog-layer
-# trade as sources/registry's scan cache and text.py's postings index.
+# The session-persisted shingle relations over ``documents`` (session memo
+# kind ``"shingles"``, keyed by sf_dir and variant: the shingle width n for
+# the distinct-set relation, "pos{n}" for the positional one). The whole
+# dedup family starts from them (tokenize → n-gram → explode-distinct — the
+# dominant cost of every shingle-based query), so a session running several
+# dedup queries back-to-back (exactly what a dedup PIPELINE does: Jaccard +
+# containment + LSH over one corpus) materializes each once, the same
+# catalog-layer trade as the memoized scans and text.py's postings index.
 # MEMORY_AND_DISK: the relation is narrow (id + one string) and spills
 # rather than OOMs; at 100 TB the equivalent is a materialized shingle
 # table maintained alongside the corpus (the persist is the session-scoped
-# stand-in). Bounded + other-session entries evicted, like _TABLE_CACHE.
-from collections import OrderedDict
-
-# Key: (applicationId, sf_dir, variant) where variant is the shingle
-# width n (distinct-set relation) or "pos{n}" (positional relation). The
-# cap is 8 entries = 4 corpora × the 2 relation flavours a full dedup
-# pipeline touches.
-_SHINGLE_CACHE: "OrderedDict[tuple[str, str, int | str], DataFrame]" = OrderedDict()
-_SHINGLE_CACHE_MAX = 8
-
-
-def _drop_shingle_entry(key: tuple[str, str, int | str]) -> None:
-    df = _SHINGLE_CACHE.pop(key)
+# stand-in). Dropping an entry unpersists it.
+def _unpersist(df: DataFrame) -> None:
     try:
         df.unpersist()
     except Exception:
         pass  # session already stopped; nothing to release
 
 
-def invalidate_shingle_cache(sf_dir: str | None = None) -> None:
-    """Release persisted shingle relations for one sf_dir, or all."""
-    for key in [k for k in _SHINGLE_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _drop_shingle_entry(key)
-
-
 def _shared_relation(spark: SparkSession, sf_dir: str, variant, build) -> DataFrame:
-    """LRU-cached session persist of one derived-from-``documents`` relation."""
-    key = (spark.sparkContext.applicationId, sf_dir, variant)
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is not None:
-        _SHINGLE_CACHE.move_to_end(key)
-        return hit
+    """Memoized session persist of one derived-from-``documents`` relation."""
     from pyspark import StorageLevel
 
-    sh = build().persist(StorageLevel.MEMORY_AND_DISK)
-    for stale in [k for k in _SHINGLE_CACHE if k[0] != key[0]]:
-        _drop_shingle_entry(stale)
-    _SHINGLE_CACHE[key] = sh
-    while len(_SHINGLE_CACHE) > _SHINGLE_CACHE_MAX:
-        _drop_shingle_entry(next(iter(_SHINGLE_CACHE)))
-    return sh
+    return session_memo(
+        spark,
+        sf_dir,
+        "shingles",
+        lambda: build().persist(StorageLevel.MEMORY_AND_DISK),
+        variant,
+        release=_unpersist,
+    )
 
 
 def shared_shingles(spark: SparkSession, sf_dir: str, n: int = 2) -> DataFrame:
@@ -114,7 +95,7 @@ def shared_pos_shingles(spark: SparkSession, sf_dir: str, n: int = 8) -> DataFra
     (session, corpus), the same catalog trade as ``shared_shingles``. At
     100 TB the equivalent is a materialized positional-shingle table
     maintained alongside the corpus; the persist is the session-scoped
-    stand-in and is disk-backed (MEMORY_AND_DISK) with LRU eviction."""
+    stand-in and is disk-backed (MEMORY_AND_DISK)."""
 
     def build() -> DataFrame:
         from data_warehouse_product_mix_clustering_spark.operators.skew import fan_out

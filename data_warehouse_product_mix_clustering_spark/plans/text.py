@@ -28,6 +28,7 @@ from data_warehouse_product_mix_clustering_spark.functions.text import (
     tokens,
 )
 from data_warehouse_product_mix_clustering_spark.plans.registry import register
+from data_warehouse_product_mix_clustering_spark.session import invalidate, session_memo
 from data_warehouse_product_mix_clustering_spark.sources.registry import table
 
 _TOKS_CTE = f"""
@@ -880,36 +881,18 @@ def doc_bm25_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # value-identical to the one-pass scorer by sharing its oracle.
 # ---------------------------------------------------------------------------
 
-# (applicationId, sf_dir) → built index dir. Same lifecycle discipline as
-# the scan/star/fit caches: other-session keys evicted on insert, bounded,
-# and part of the documented rewrite protocol — a caller that rewrites the
-# documents parquet mid-session calls sources.registry.invalidate(path) AND
-# invalidate_postings_cache(sf_dir), else the index serves the old corpus.
-_POSTINGS_CACHE: dict[tuple[str, str], str] = {}
-_POSTINGS_CACHE_MAX = 4
-
-
-def _drop_postings_entry(key) -> None:
-    # Unlike the in-memory caches this mirrors, each entry OWNS an
-    # on-disk index — eviction must reclaim the directory or every
-    # drop strands a corpus-sized index under /tmp (review r8).
+def _rmtree(path: str) -> None:
     import shutil
 
-    path = _POSTINGS_CACHE.pop(key)
     shutil.rmtree(path, ignore_errors=True)
 
 
-def invalidate_postings_cache(sf_dir: str | None = None) -> None:
-    """Drop built postings indexes (dict entry AND index directory) for
-    one sf_dir, or all."""
-    for key in [
-        k for k in _POSTINGS_CACHE if sf_dir is None or k[1] == sf_dir
-    ]:
-        _drop_postings_entry(key)
-
-
 def _postings_index_for(spark: SparkSession, sf_dir: str) -> str:
-    import os
+    """The built index dir for ``sf_dir``'s documents, memoized per session
+    (kind ``"postings"``), so a rewrite of the documents parquet takes the
+    one ``invalidate(sf_dir)`` call. Unlike the in-memory entries, each one
+    OWNS an on-disk index: dropping it removes the directory, or every drop
+    would strand a corpus-sized index under the temp dir (review r8)."""
     import tempfile
 
     from data_warehouse_product_mix_clustering_spark.operators.postings import (
@@ -917,26 +900,21 @@ def _postings_index_for(spark: SparkSession, sf_dir: str) -> str:
         index_is_committed,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _POSTINGS_CACHE.get(key)
-    if hit is not None:
-        # The commit marker (not just stats/ existing) decides freshness:
-        # a torn build/update leaves the marker absent, forcing a rebuild
-        # instead of serving mutually inconsistent relations (ADVICE r8).
-        if index_is_committed(hit):
-            return hit
-        # stale entry (partial build / external cleanup): reclaim the
-        # old directory before rebuilding, or it strands under /tmp
-        _drop_postings_entry(key)
-    index_dir = tempfile.mkdtemp(prefix="spark_graft_postings_")
-    docs = table(spark, "documents", sf_dir).select("doc_id", "text")
-    build_postings_index(docs, index_dir, tokens(F.col("text")))
-    for k in [k for k in _POSTINGS_CACHE if k[0] != key[0]]:
-        _drop_postings_entry(k)
-    _POSTINGS_CACHE[key] = index_dir
-    while len(_POSTINGS_CACHE) > _POSTINGS_CACHE_MAX:
-        _drop_postings_entry(next(iter(_POSTINGS_CACHE)))
-    return index_dir
+    def build() -> str:
+        index_dir = tempfile.mkdtemp(prefix="spark_graft_postings_")
+        docs = table(spark, "documents", sf_dir).select("doc_id", "text")
+        build_postings_index(docs, index_dir, tokens(F.col("text")))
+        return index_dir
+
+    idx = session_memo(spark, sf_dir, "postings", build, release=_rmtree)
+    # The commit marker (not just stats/ existing) decides freshness: a
+    # torn build/update (or external cleanup) leaves the marker absent,
+    # forcing a rebuild instead of serving mutually inconsistent relations
+    # (ADVICE r8). Invalidating reclaims the stale directory first.
+    if not index_is_committed(idx):
+        invalidate(sf_dir, kind="postings")
+        idx = session_memo(spark, sf_dir, "postings", build, release=_rmtree)
+    return idx
 
 
 @register(
@@ -1297,60 +1275,29 @@ def bm25_wand_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_N_MERGES = 20
 _BPE_AUDIT_VOCAB_CAP = 2000
 
-# (applicationId, sf_dir, n_merges) → trained merge table. The
-# product_clusters fit-cache lifecycle exactly (plans/ml.py): training is
-# the expensive iterative stage (20 merge rounds ≈ 32 s at sf0.1), the
-# result is O(n_merges) driver state, and every consumer — the merge
-# table query, tokenizer-true context windows, their audit — needs the
-# SAME table, so a pipeline trains once per (session, corpus). Safe
-# because train_bpe is deterministic on fixed input; `bpe_train_audit`
-# and the property tests call train_bpe DIRECTLY (never this cache), so
-# the training-rule contracts stay real training runs. Chained into the
-# star-schema invalidation protocol: a documented corpus rewrite drops
-# the memo with the data it was mined from (the advisor-memo rule).
-from collections import OrderedDict as _OrderedDict
-
-_MERGES_CACHE: "_OrderedDict[tuple[str, str, int], list]" = _OrderedDict()
-_MERGES_CACHE_MAX = 8
-
-
-def invalidate_bpe_merges_cache(sf_dir: str | None = None) -> None:
-    """Drop cached merge tables for one sf_dir (or all). Registered with
-    the star-schema invalidator so the documented rewrite protocol
-    (sources.registry.invalidate + invalidate_star_cache) also clears
-    tokenizers trained on that data."""
-    if sf_dir is None:
-        _MERGES_CACHE.clear()
-        return
-    for key in [k for k in _MERGES_CACHE if k[1] == sf_dir]:
-        del _MERGES_CACHE[key]
-
-
-from data_warehouse_product_mix_clustering_spark.etl import star_schema as _star_schema  # noqa: E402
-
-_star_schema.register_downstream_invalidator(invalidate_bpe_merges_cache)
-
-
 def corpus_bpe_merges(
     spark: SparkSession, sf_dir: str, n_merges: int = _BPE_N_MERGES
 ) -> list:
-    """The trained merge table for ``sf_dir``'s documents, session-memoized
-    (see ``_MERGES_CACHE``'s comment for the lifecycle and why audits
-    bypass it)."""
+    """The trained merge table for ``sf_dir``'s documents, memoized per
+    (session, sf_dir, n_merges) in the session memo (kind
+    ``"bpe_merges"``) — the product_clusters fit lifecycle: training is
+    the expensive iterative stage (20 merge rounds ≈ 32 s at sf0.1), the
+    result is O(n_merges) driver state, and every consumer — the merge
+    table query, tokenizer-true context windows, their audit — needs the
+    SAME table, so a pipeline trains once per (session, corpus) until
+    ``invalidate(sf_dir)``. Safe because train_bpe is deterministic on
+    fixed input; `bpe_train_audit` and the property tests call train_bpe
+    DIRECTLY (never the memo), so the training-rule contracts stay real
+    training runs."""
     from data_warehouse_product_mix_clustering_spark.operators.bpe import train_bpe, word_counts
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    hit = _MERGES_CACHE.get(key)
-    if hit is not None:
-        _MERGES_CACHE.move_to_end(key)
-        return hit
-    merges = train_bpe(word_counts(table(spark, "documents", sf_dir)), n_merges)
-    for k in [k for k in _MERGES_CACHE if k[0] != key[0]]:
-        del _MERGES_CACHE[k]  # stopped sessions' state must not linger
-    _MERGES_CACHE[key] = merges
-    while len(_MERGES_CACHE) > _MERGES_CACHE_MAX:
-        _MERGES_CACHE.popitem(last=False)
-    return merges
+    return session_memo(
+        spark,
+        sf_dir,
+        "bpe_merges",
+        lambda: train_bpe(word_counts(table(spark, "documents", sf_dir)), n_merges),
+        n_merges,
+    )
 
 
 @register("bpe_merge_table")
@@ -1361,11 +1308,11 @@ def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     20 merges is a weighted pair aggregate over that relation plus a
     1-row argmax collect (the model itself is O(n_merges) driver state
     by construction). Session-memoized via ``corpus_bpe_merges`` (the
-    product_clusters fit-cache parity — every tokenizer consumer reads
-    the same trained table). Rows-only: the iterative argmax is not
+    product_clusters fit parity — every tokenizer consumer reads the
+    same trained table). Rows-only: the iterative argmax is not
     SQL-expressible; the training rule is pinned cross-implementation by
     ``bpe_train_audit`` (Spark ≡ reference twin on a capped vocab,
-    bypassing the cache) and property-tested on random corpora vs the
+    bypassing the memo) and property-tested on random corpora vs the
     same twin."""
     from data_warehouse_product_mix_clustering_spark.operators.bpe import merges_to_df
 

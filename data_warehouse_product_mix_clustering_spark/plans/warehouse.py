@@ -1343,7 +1343,7 @@ def nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def nation_revenue_parts(spark: SparkSession, sf_dir: str):
     """(result, advisor_choice) — the ANALYZE→plan loop closed (VERDICT
     r10 #6): the customer-dim join is planned by
-    ``operators/stats.py::advise_broadcast_join`` from measured Catalyst
+    ``operators/stats.py::broadcast_choice`` from measured Catalyst
     plan sizes, so the executed strategy follows the stats instead of a
     hope-it-fits hint. At test/bench SFs customer sits well under the
     10 MB default and is advised broadcast; at a 100 TB customer dim the
@@ -1351,27 +1351,28 @@ def nation_revenue_parts(spark: SparkSession, sf_dir: str):
     choice string is returned so the plan-shape test can pin advice ≡
     executed plan (a stats regression flips both together, and the test
     catches a divergence)."""
-    from data_warehouse_product_mix_clustering_spark.operators.stats import advise_broadcast_join
+    from data_warehouse_product_mix_clustering_spark.operators.stats import (
+        broadcast_choice,
+        join_with_choice,
+    )
+    from data_warehouse_product_mix_clustering_spark.session import session_memo
 
     li = table(spark, "lineitem", sf_dir)
     o = table(spark, "orders", sf_dir)
-    c = table(spark, "customer", sf_dir)
+    c = table(spark, "customer", sf_dir).withColumnRenamed("c_custkey", "o_custkey")
     n = table(spark, "nation", sf_dir)
     r = table(spark, "region", sf_dir)
     per_order = li.groupBy("l_orderkey").agg(
         F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("__rev")
     )
     fact = per_order.join(o, per_order.l_orderkey == o.o_orderkey)
-    enriched, choice = advise_broadcast_join(
-        fact,
-        c.withColumnRenamed("c_custkey", "o_custkey"),
-        ["o_custkey"],
-        # Session-memoized (VERDICT r11 #1): the two plan_size_bytes
-        # optimizer passes run once per (session, sf_dir); every later
-        # serving call applies the remembered choice for free. The scan
-        # cache's invalidate() drops the entry if the data is rewritten.
-        cache_key=("nation_revenue.customer", sf_dir),
+    # Session-memoized (VERDICT r11 #1): the two plan_size_bytes optimizer
+    # passes run once per (session, sf_dir); every later serving call
+    # applies the remembered choice for free until invalidate(sf_dir).
+    choice = session_memo(
+        spark, sf_dir, "advice", lambda: broadcast_choice(fact, c), "nation_revenue.customer"
     )
+    enriched = join_with_choice(fact, c, ["o_custkey"], "inner", choice)
     out = (
         enriched.join(F.broadcast(n), enriched.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)

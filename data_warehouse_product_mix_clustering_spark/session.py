@@ -17,10 +17,86 @@ local[] test scale and 1000-executor cluster scale:
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = max(os.cpu_count() or 8, 8)
+
+# The session memo: every artefact derived from one sf_dir's data and
+# reused across a session's queries (table scans, star-builder plans, the
+# KMeans fit, persisted shingle relations, the postings index, BPE merge
+# tables, broadcast-advisor choices) — the engine-side ``@st.cache_data``
+# of reference Clustering_Analysis.py:24. Keyed (applicationId, sf_dir,
+# kind, *args), grouped by sf_dir: sf_dir → {(applicationId, kind, *args):
+# (value, release)}. Entries from other sessions are dropped on insert (a
+# stopped session's plans, persists and index dirs would otherwise be
+# pinned forever); the sf_dirs are LRU-bounded. ``release`` reclaims what
+# an entry owns (an unpersist, an index directory) whenever it is dropped.
+_MEMO: "OrderedDict[str, dict[tuple, tuple[Any, Callable[[Any], None] | None]]]" = (
+    OrderedDict()
+)
+# Measured: the tier-1 suite peaks at 4 sf_dirs in one session and the
+# benchmark workloads at 1, so no reuse is lost to this bound.
+MEMO_MAX_SF_DIRS = 8
+
+
+def _release(entries) -> None:
+    for value, release in entries:
+        if release is not None:
+            release(value)
+
+
+def session_memo(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    build: Callable[[], Any],
+    *args,
+    release: Callable[[Any], None] | None = None,
+) -> Any:
+    """``build()``'s result, built once per (session, sf_dir, kind, *args).
+
+    Only deterministic builds over ``sf_dir``'s data belong here: a hit
+    serves the first result until ``invalidate`` drops it."""
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, kind, *args)
+    entries = _MEMO.get(sf_dir)
+    if entries is not None and key in entries:
+        _MEMO.move_to_end(sf_dir)
+        return entries[key][0]
+    value = build()
+    stale = []
+    for sf, ents in list(_MEMO.items()):
+        for k in [k for k in ents if k[0] != app_id]:
+            stale.append(ents.pop(k))
+        if not ents:
+            del _MEMO[sf]
+    _MEMO.setdefault(sf_dir, {})[key] = (value, release)
+    _MEMO.move_to_end(sf_dir)
+    while len(_MEMO) > MEMO_MAX_SF_DIRS:
+        stale.extend(_MEMO.popitem(last=False)[1].values())
+    _release(stale)
+    return value
+
+
+def invalidate(sf_dir: str | None = None, kind: str | None = None) -> None:
+    """Drop memoized entries for ``sf_dir`` (every sf_dir when None), only
+    those of ``kind`` when given, running each entry's ``release``.
+
+    The rewrite protocol: a caller that rewrites data under ``sf_dir``
+    mid-session calls ``invalidate(sf_dir)`` once, and every scan, plan,
+    fit, relation, index and decision derived from it is rebuilt on next
+    use. ``invalidate()`` is a cold start."""
+    dropped = []
+    for sf in [sf_dir] if sf_dir is not None else list(_MEMO):
+        ents = _MEMO.get(sf, {})
+        for k in [k for k in ents if kind is None or k[1] == kind]:
+            dropped.append(ents.pop(k))
+        if not ents:
+            _MEMO.pop(sf, None)
+    _release(dropped)
 
 
 class no_adaptive_execution:

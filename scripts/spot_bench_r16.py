@@ -43,11 +43,11 @@ def main() -> None:
         _force(qs["nation_revenue"].fn(spark, SF_DIR))
         nation_runs.append(round(time.perf_counter() - t0, 3))
 
-    from data_warehouse_product_mix_clustering_spark.plans.ml import invalidate_cluster_cache
+    from data_warehouse_product_mix_clustering_spark.session import invalidate
 
     cold_runs = []
     for _ in range(3):
-        invalidate_cluster_cache(SF_DIR)
+        invalidate(SF_DIR, kind="fit")
         t0 = time.perf_counter()
         _force(qs["product_clusters"].fn(spark, SF_DIR))
         cold_runs.append(round(time.perf_counter() - t0, 3))

@@ -107,12 +107,12 @@ def main() -> None:
     # bench-identical preconditioning: warm-up + shared relations
     _force(qs["pricing_summary"].fn(spark, SF_DIR))
     from data_warehouse_product_mix_clustering_spark.plans.dedup import (
-        invalidate_shingle_cache,
         shared_pos_shingles,
         shared_shingles,
     )
+    from data_warehouse_product_mix_clustering_spark.session import invalidate
 
-    invalidate_shingle_cache(SF_DIR)
+    invalidate(SF_DIR, kind="shingles")
     sc.setJobGroup("relations", "shared relations")
     _force(shared_shingles(spark, SF_DIR))
     _force(shared_pos_shingles(spark, SF_DIR))

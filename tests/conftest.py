@@ -70,6 +70,19 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def fresh_memo(monkeypatch):
+    """An empty session memo for one test, released afterwards; the
+    suite's shared memo is left as it was."""
+    from collections import OrderedDict
+
+    from data_warehouse_product_mix_clustering_spark import session
+
+    monkeypatch.setattr(session, "_MEMO", OrderedDict())
+    yield session
+    session.invalidate()
+
+
 def make_duckdb(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TESTDATA_TABLES:

@@ -978,7 +978,8 @@ def test_stats_advisor_broadcast_choice(spark):
     from pyspark.sql import functions as F
 
     from data_warehouse_product_mix_clustering_spark.operators.stats import (
-        advise_broadcast_join,
+        broadcast_choice,
+        join_with_choice,
         plan_size_bytes,
     )
     from data_warehouse_product_mix_clustering_spark.sources.registry import table
@@ -989,42 +990,35 @@ def test_stats_advisor_broadcast_choice(spark):
 
     assert plan_size_bytes(nat) < plan_size_bytes(li)
 
-    joined, choice = advise_broadcast_join(
-        li.withColumnRenamed("l_suppkey", "s_suppkey"), sup, ["s_suppkey"]
-    )
+    li2 = li.withColumnRenamed("l_suppkey", "s_suppkey")
+    choice = broadcast_choice(li2, sup)
     assert choice == "broadcast_right"
+    joined = join_with_choice(li2, sup, ["s_suppkey"], "inner", choice)
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
     # both sides over threshold -> unhinted shuffle join
     big_l = li
     big_r = li.select(F.col("l_orderkey"), F.col("l_extendedprice").alias("p2"))
-    _, choice = advise_broadcast_join(big_l, big_r, ["l_orderkey"], threshold_bytes=1)
-    assert choice == "shuffle"
+    assert broadcast_choice(big_l, big_r, threshold_bytes=1) == "shuffle"
 
     # join-type eligibility (review r10): a LEFT join cannot build its
     # left side, so a tiny LEFT input must NOT be reported broadcast —
     # Spark would silently drop the hint and the choice string would lie
     nat2 = nat.withColumnRenamed("n_nationkey", "s_nationkey")
-    _, choice = advise_broadcast_join(nat2, sup, ["s_nationkey"], how="left")
+    choice = broadcast_choice(nat2, sup, how="left")
     assert choice in ("broadcast_right", "shuffle") and choice != "broadcast_left"
-    joined, choice = advise_broadcast_join(sup, nat2, ["s_nationkey"], how="left")
+    choice = broadcast_choice(sup, nat2, how="left")
     assert choice == "broadcast_right"
+    joined = join_with_choice(sup, nat2, ["s_nationkey"], "left", choice)
     assert "BroadcastHashJoin" in joined._jdf.queryExecution().executedPlan().toString()
-    _, choice = advise_broadcast_join(nat2, sup, ["s_nationkey"], how="full")
+    choice = broadcast_choice(nat2, sup, how="full")
     assert choice == "shuffle", "full outer can broadcast neither side"
 
 
-def test_advisor_decision_memoized_per_session(spark, monkeypatch):
-    """VERDICT r11 #1: plan_size_bytes runs an optimizer pass on the
-    driver (~0.1-0.2 s), and nation_revenue paid TWO per serving call —
-    tripping its bench budget. The decision must be measured once per
-    (session, cache_key) and applied for free afterwards; invalidation
-    (scan-cache invalidate / invalidate_advice) forces a re-measure."""
+def _count_plan_size_calls(monkeypatch):
     from data_warehouse_product_mix_clustering_spark.operators import stats
-    from data_warehouse_product_mix_clustering_spark.sources.registry import table
 
-    stats.invalidate_advice()
     calls = {"n": 0}
     real = stats.plan_size_bytes
 
@@ -1033,74 +1027,59 @@ def test_advisor_decision_memoized_per_session(spark, monkeypatch):
         return real(df)
 
     monkeypatch.setattr(stats, "plan_size_bytes", counting)
-    nat = table(spark, "nation", SF_SMOKE)
-    sup = table(spark, "supplier", SF_SMOKE)
-    key = ("test_advisor_memo", SF_SMOKE)
-    _, c1 = stats.advise_broadcast_join(sup, nat.withColumnRenamed(
-        "n_nationkey", "s_nationkey"), ["s_nationkey"], cache_key=key)
+    return calls
+
+
+def test_advisor_decision_memoized_per_session(spark, monkeypatch, fresh_memo):
+    """VERDICT r11 #1: plan_size_bytes runs an optimizer pass on the
+    driver (~0.1-0.2 s), and nation_revenue paid TWO per serving call —
+    tripping its bench budget. Its decision must be measured once per
+    (session, sf_dir) and applied for free afterwards; dropping the
+    memoized advice forces a re-measure, and unmemoized advice measures
+    every time."""
+    from data_warehouse_product_mix_clustering_spark.operators import stats
+    from data_warehouse_product_mix_clustering_spark.plans.warehouse import nation_revenue_parts
+    from data_warehouse_product_mix_clustering_spark.session import invalidate
+    from data_warehouse_product_mix_clustering_spark.sources.registry import table
+
+    calls = _count_plan_size_calls(monkeypatch)
+    _, c1 = nation_revenue_parts(spark, SF_SMOKE)
     assert calls["n"] == 2  # first call measures both sides
-    _, c2 = stats.advise_broadcast_join(sup, nat.withColumnRenamed(
-        "n_nationkey", "s_nationkey"), ["s_nationkey"], cache_key=key)
+    _, c2 = nation_revenue_parts(spark, SF_SMOKE)
     assert calls["n"] == 2  # second call: zero optimizer passes
     assert c1 == c2
-    # uncached calls still measure every time
-    stats.advise_broadcast_join(sup, nat.withColumnRenamed(
-        "n_nationkey", "s_nationkey"), ["s_nationkey"])
+    # unmemoized advice still measures every time
+    nat = table(spark, "nation", SF_SMOKE)
+    sup = table(spark, "supplier", SF_SMOKE)
+    stats.broadcast_choice(sup, nat.withColumnRenamed("n_nationkey", "s_nationkey"))
     assert calls["n"] == 4
-    # invalidation by sf_dir drops the entry → next call re-measures
-    stats.invalidate_advice(SF_SMOKE)
-    stats.advise_broadcast_join(sup, nat.withColumnRenamed(
-        "n_nationkey", "s_nationkey"), ["s_nationkey"], cache_key=key)
+    # dropping the advice for this sf_dir → next call re-measures
+    invalidate(SF_SMOKE, kind="advice")
+    nation_revenue_parts(spark, SF_SMOKE)
     assert calls["n"] == 6
 
 
-def test_advisor_memo_dropped_by_table_path_invalidate(spark, monkeypatch):
-    """Review r12: the scan cache's invalidate() is called with table
-    FILE paths ('{sf_dir}/customer.parquet') while advisor cache keys
-    carry the bare sf_dir — the first cut compared tuple elements by
-    equality, so no real path-scoped invalidation ever dropped a memo
-    and a rewritten table could keep serving its stale broadcast hint.
-    The wired integration must force a re-measure."""
-    import os
-
-    from data_warehouse_product_mix_clustering_spark.operators import stats
+def test_advisor_memo_dropped_by_table_path_invalidate(spark, monkeypatch, fresh_memo):
+    """Review r12: a rewritten table must never keep serving its stale
+    broadcast hint. The rewrite protocol's one call — the scan registry's
+    invalidate(sf_dir) — must drop the memoized decision too, forcing a
+    re-measure."""
+    from data_warehouse_product_mix_clustering_spark.plans.warehouse import nation_revenue_parts
     from data_warehouse_product_mix_clustering_spark.sources import registry
-    from data_warehouse_product_mix_clustering_spark.sources.registry import table
 
-    stats.invalidate_advice()
-    calls = {"n": 0}
-    real = stats.plan_size_bytes
-
-    def counting(df):
-        calls["n"] += 1
-        return real(df)
-
-    monkeypatch.setattr(stats, "plan_size_bytes", counting)
-    nat = table(spark, "nation", SF_SMOKE)
-    sup = table(spark, "supplier", SF_SMOKE)
-    key = ("test_advisor_path_inval", SF_SMOKE)
-
-    def advise():
-        return stats.advise_broadcast_join(
-            sup,
-            nat.withColumnRenamed("n_nationkey", "s_nationkey"),
-            ["s_nationkey"],
-            cache_key=key,
-        )
-
-    advise()
+    calls = _count_plan_size_calls(monkeypatch)
+    nation_revenue_parts(spark, SF_SMOKE)
     assert calls["n"] == 2
-    advise()
+    nation_revenue_parts(spark, SF_SMOKE)
     assert calls["n"] == 2  # memoized
-    # the documented rewrite protocol: invalidate the table FILE path
-    registry.invalidate(os.path.join(SF_SMOKE, "nation.parquet"))
-    advise()
-    assert calls["n"] == 4, "path-scoped invalidate must drop the memo"
+    registry.invalidate(SF_SMOKE)
+    nation_revenue_parts(spark, SF_SMOKE)
+    assert calls["n"] == 4, "the sf_dir invalidate must drop the memo"
 
 
 def test_nation_revenue_join_strategy_follows_advisor(spark):
     """The ANALYZE→plan loop, closed (VERDICT r10 #6): nation_revenue's
-    customer join is planned by advise_broadcast_join from measured
+    customer join is planned by broadcast_choice from measured
     Catalyst sizes, so the ADVISED strategy must appear in the EXECUTED
     plan — a stats regression that flips the advice flips the physical
     plan with it, and a divergence (advice says broadcast, plan

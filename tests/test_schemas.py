@@ -96,49 +96,3 @@ def test_table_scan_metadata_cached(spark):
     assert dict(ev1.dtypes)["ts"].startswith("timestamp"), (
         "cached events scan must be the NORMALIZED one"
     )
-
-
-def test_table_scan_cache_bounded_and_invalidatable(spark):
-    """The scan cache must not grow without bound, must forget stale
-    sessions, and must honor explicit invalidation for rewritten paths."""
-    import os
-
-    from data_warehouse_product_mix_clustering_spark.sources import registry
-    from data_warehouse_product_mix_clustering_spark.sources.registry import (
-        _TABLE_CACHE,
-        invalidate,
-        table,
-    )
-
-    app_id = spark.sparkContext.applicationId
-    a = table(spark, "orders", "/root/testdata/sf0.001")
-
-    # Entries keyed to a session other than the inserting one are evicted
-    # on the next insert — a restarted session never reuses (or pins) the
-    # old session's DataFrames.
-    path = os.path.join("/root/testdata/sf0.001", "orders.parquet")
-    _TABLE_CACHE[("dead-app-id", path)] = a
-    # Eviction happens on INSERT, so force a cache miss for the probe read.
-    invalidate(os.path.join("/root/testdata/sf0.001", "lineitem.parquet"))
-    table(spark, "lineitem", "/root/testdata/sf0.001")
-    assert ("dead-app-id", path) not in _TABLE_CACHE
-    assert all(k[0] == app_id for k in _TABLE_CACHE)
-
-    # invalidate(path) drops that path only; the next call re-resolves.
-    invalidate(path)
-    assert all(k[1] != path for k in _TABLE_CACHE)
-    a2 = table(spark, "orders", "/root/testdata/sf0.001")
-    assert a2 is not a, "invalidated path must be re-resolved from disk"
-
-    # LRU bound: the cache never exceeds its cap.
-    old_max = registry._TABLE_CACHE_MAX
-    registry._TABLE_CACHE_MAX = 2
-    try:
-        invalidate()  # start empty so all three reads below are inserts
-        table(spark, "region", "/root/testdata/sf0.001")
-        table(spark, "nation", "/root/testdata/sf0.001")
-        table(spark, "customer", "/root/testdata/sf0.001")
-        assert len(_TABLE_CACHE) <= 2
-    finally:
-        registry._TABLE_CACHE_MAX = old_max
-        invalidate()
